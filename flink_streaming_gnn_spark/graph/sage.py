@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType
@@ -38,7 +38,9 @@ def sage_weights(out_dim: int = OUT_DIM, in_dim: int = DIM) -> tuple[np.ndarray,
     return w_self, w_agg
 
 
-def neighbor_mean(edges_v: DataFrame, features: DataFrame, dim: int) -> DataFrame:
+def neighbor_mean(
+    edges_v: DataFrame, features: DataFrame, dim: int, *keys: str | Column
+) -> DataFrame:
     """Per-vertex mean of in-neighbor feature vectors.
 
     JVM-only: one join + one hash aggregate with ``dim`` element-wise
@@ -47,24 +49,31 @@ def neighbor_mean(edges_v: DataFrame, features: DataFrame, dim: int) -> DataFram
     with the graph, so it is broadcast only while Catalyst estimates it
     small — at scale this becomes a shuffle join on src_v, which is the
     right plan for a features table that no longer fits one executor.
-    ``features`` must have (vec_id, feat array<…>).
+    ``features`` must have (vec_id, feat array<…>). ``keys`` are extra
+    group-by columns (e.g. a time window), output ahead of (dst_v, agg).
     """
     joined = edges_v.join(maybe_broadcast(features), edges_v.src_v == features.vec_id)
     aggs = [
         F.avg(F.element_at(F.col("feat").cast("array<double>"), i)).alias(f"_a{i}")
         for i in range(1, dim + 1)
     ]
-    per_dst = joined.groupBy("dst_v").agg(*aggs)
+    per_dst = joined.groupBy(*keys, "dst_v").agg(*aggs)
     return per_dst.select(
-        "dst_v", F.array(*[f"_a{i}" for i in range(1, dim + 1)]).alias("agg")
+        *per_dst.columns[: len(keys) + 1],
+        F.array(*[f"_a{i}" for i in range(1, dim + 1)]).alias("agg"),
     )
 
 
 def sage_forward(
-    vertices: DataFrame, neighbor_agg: DataFrame, w_self: np.ndarray, w_agg: np.ndarray
+    vertices: DataFrame,
+    neighbor_agg: DataFrame,
+    w_self: np.ndarray,
+    w_agg: np.ndarray,
+    *keys: str | Column,
 ) -> DataFrame:
     """h_v = relu(W_self @ f_v + W_agg @ agg_v) as an Arrow-batched numpy
-    matmul. ``vertices``: (vec_id, feat), ``neighbor_agg``: (dst_v, agg).
+    matmul. ``vertices``: (vec_id, feat), ``neighbor_agg``: (dst_v, agg)
+    plus the ``keys`` columns, which are output ahead of (vec_id, h).
     Inner join: only vertices with at least one in-neighbor get an output
     (same semantics in the oracle twin)."""
     ws, wa = w_self.tolist(), w_agg.tolist()  # pickled by value into the UDF
@@ -80,9 +89,10 @@ def sage_forward(
         h = _np.maximum(f @ w1.T + a @ w2.T, 0.0)
         return pd.Series(list(h))
 
-    return vertices.join(neighbor_agg, vertices.vec_id == neighbor_agg.dst_v).select(
-        "vec_id", forward("feat", "agg").alias("h")
+    joined = neighbor_agg.join(
+        maybe_broadcast(vertices), neighbor_agg.dst_v == vertices.vec_id
     )
+    return joined.select(*keys, "vec_id", forward("feat", "agg").alias("h"))
 
 
 def graph_sage_layer(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -5,6 +5,15 @@ with the UTC-naive DuckDB oracle), shuffle partitions sized to cores instead
 of the 200 default. At cluster scale the same builder is used with
 ``master`` unset (picked up from spark-submit) and shuffle partitions sized
 to input volume.
+
+Configuration: the only environment settings are deployment ones —
+``SPARK_GRAFT_CPUS`` (local cores and partition count; default: the CPUs
+this process may run on), ``SPARK_GRAFT_DRIVER_MEM`` (driver heap; default:
+half of MemTotal, at most 24g), ``SPARK_GRAFT_ON_CLUSTER`` (leave
+``master`` to spark-submit), ``SPARK_GRAFT_SF_DIR`` and
+``SPARK_GRAFT_TEST_SF_DIR`` (corpus directories). Any Spark setting,
+including those fixed below, is overridden through
+``get_spark(extra_conf=...)``.
 """
 
 from __future__ import annotations
@@ -13,7 +22,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _host_driver_mem() -> str:
+    """Half of the host's MemTotal, capped at 24g: the driver JVM shares
+    the host with the Python workers and the OS."""
+    with open("/proc/meminfo") as f:
+        total_kb = int(next(line for line in f if line.startswith("MemTotal")).split()[1])
+    return f"{min(24 * 1024, total_kb // 1024 // 2)}m"
 
 
 def get_spark(
@@ -40,15 +57,11 @@ def get_spark(
         .config("spark.default.parallelism", str(n))
         # Scan-split size follows the same sizing rule as shuffle
         # partitions: fixtures here are ~100 MB, so the 128 MB default
-        # collapses scans to one task and starves the other 31 cores —
-        # 16 MB keeps every core fed. On a 1000-executor/100 TB deployment
-        # set SPARK_GRAFT_MAX_PARTITION_BYTES back to 128 MB+ (fewer,
-        # fuller tasks; the scheduler, not the split size, is the
-        # parallelism source there).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(16 * 1024 * 1024)),
-        )
+        # collapses scans to one task and starves the other cores — 16 MB
+        # keeps every core fed. On a 1000-executor/100 TB deployment set
+        # it back to 128 MB+ through extra_conf (fewer, fuller tasks; the
+        # scheduler, not the split size, is the parallelism source there).
+        .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         # ContextCleaner only releases per-query broadcast/shuffle state
         # after a driver GC processes the weak references; with a 24g heap
         # a session can go MANY queries between collections and later
@@ -65,54 +78,19 @@ def get_spark(
         # and disk-backed — the production choice for large keyed state;
         # per-query memory becomes a bounded block-cache, so state size
         # scales with DISK, not heap, exactly the 100 TB posture.
-        # Override with SPARK_GRAFT_STATESTORE=hdfs to A/B the default.
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider"
-            if os.environ.get("SPARK_GRAFT_STATESTORE") == "hdfs"
-            else "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
-        )
-        # Round-9 join-strategy knob (guide §3.1): SPARK_GRAFT_PREFER_SHJ=1
-        # lets the planner (and AQE's runtime rewrite) pick shuffled-hash
-        # over sort-merge when a per-partition build side fits. A/B'd at
-        # ×10 (tools/ab_r9_prefer_shj.log): no separation — at bench
-        # scales every probed join is already a broadcast join, so the
-        # preference never engages. Default stays Spark's; the knob is a
-        # cluster-tuning parameter, to be decided with cluster numbers.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            "false" if os.environ.get("SPARK_GRAFT_PREFER_SHJ") == "1" else "true",
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            "64MB" if os.environ.get("SPARK_GRAFT_PREFER_SHJ") == "1" else "0",
-        )
-        # Shuffle codec knob (guide §2.3): zstd trades CPU for ratio — a
-        # likely win on a NIC/disk-bound cluster, pure CPU overhead on a
-        # page-cache local shuffle. Three round-9 A/Bs (tools/ab_r9_zstd*
-        # .log) found NO codec signal at ×10: the apparent zstd win
-        # reversed exactly under an order-reversal control (arm-order bias
-        # from transient host noise). lz4 default stays; re-measure on the
-        # target cluster before flipping.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
         )
         # Parquet codec for everything the engine WRITES (spools, sinks,
         # scratch, blown corpora): zstd per guide §6/§9 — smaller than
-        # snappy at similar read speed. Unlike the SHUFFLE codec (E3:
-        # no signal on a page-cache shuffle, lz4 kept), parquet output
-        # hits disk and is re-read; on the disk-bound ×1000 ladder the
-        # ratio is the difference between fitting the run in the sandbox
-        # disk budget and ENOSPC (round-9 rung attempt). No timed
-        # headline query writes parquet (noop sink), so the bench is
-        # unaffected; results are codec-independent.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
+        # snappy at similar read speed. Unlike the SHUFFLE codec (no
+        # signal on a page-cache shuffle, Spark's lz4 kept), parquet
+        # output hits disk and is re-read; on the disk-bound ×1000 ladder
+        # the ratio is the difference between fitting the run in the
+        # sandbox disk budget and ENOSPC (round-9 rung attempt).
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # Single-JVM large-state robustness (round-9 ×100 soak catch): at
         # 10⁸-row streaming state a >10 s full-GC (24g heap) or transient
         # host stall blows the IN-PROCESS executor heartbeat
@@ -121,16 +99,13 @@ def get_spark(
         # tools/probe_r9_soak_x100.log, first attempt). 30s/600s are the
         # standard large-heap settings; timeouts change no plan and are
         # inert at bench scale.
-        .config(
-            "spark.executor.heartbeatInterval",
-            os.environ.get("SPARK_GRAFT_HEARTBEAT_INTERVAL", "30s"),
-        )
-        .config(
-            "spark.network.timeout",
-            os.environ.get("SPARK_GRAFT_NETWORK_TIMEOUT", "600s"),
-        )
+        .config("spark.executor.heartbeatInterval", "30s")
+        .config("spark.network.timeout", "600s")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem(),
+        )
         # ANSI mode off: engine follows classic Spark SQL null-on-error
         # semantics, matching the permissive oracle comparisons.
         .config("spark.sql.ansi.enabled", "false")

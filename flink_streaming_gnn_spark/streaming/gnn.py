@@ -18,23 +18,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import EMB_MOD
-from flink_streaming_gnn_spark.graph.sage import DIM, OUT_DIM, sage_weights
-from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
+from flink_streaming_gnn_spark.graph.edges import EMB_MOD, derive_edges
+from flink_streaming_gnn_spark.graph.sage import (
+    DIM,
+    OUT_DIM,
+    neighbor_mean,
+    sage_forward,
+    sage_weights,
+)
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 
 def edges_v_with_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edge events in embedding-vertex space with event time (reference A1:
     each lineitem row is one timestamped edge arrival)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    return li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.pmod("o_custkey", F.lit(EMB_MOD)).cast("long").alias("src_v"),
-        F.pmod("l_suppkey", F.lit(EMB_MOD)).cast("long").alias("dst_v"),
-        F.col("l_shipdate").alias("ts"),
+    return derive_edges(spark, sf_dir).select(
+        F.pmod("src", F.lit(EMB_MOD)).cast("long").alias("src_v"),
+        F.pmod("dst", F.lit(EMB_MOD)).cast("long").alias("dst_v"),
+        "ts",
     )
 
 
@@ -47,38 +48,12 @@ def windowed_sage(edges: DataFrame, features: DataFrame) -> DataFrame:
     a window collapses into one 64-dim running mean (the A8 dedup); one
     shuffle on (window, dst_v). Stage 2 — batched forward: one pandas UDF
     call per Arrow batch of coalesced vertices (the A8 batched tensor op).
+    Both stages are the batch SAGE layer's, with the window as a group key.
     """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, DoubleType
-
     w_self, w_agg = sage_weights()
-    ws, wa = w_self.tolist(), w_agg.tolist()
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def forward(f_col, a_col):
-        import numpy as _np
-
-        w1, w2 = _np.asarray(ws), _np.asarray(wa)
-        f = _np.stack([_np.asarray(x, dtype=_np.float64) for x in f_col])
-        a = _np.stack([_np.asarray(x, dtype=_np.float64) for x in a_col])
-        return pd.Series(list(_np.maximum(f @ w1.T + a @ w2.T, 0.0)))
-
-    joined = edges.join(maybe_broadcast(features), edges.src_v == features.vec_id)
-    aggs = [
-        F.avg(F.element_at(F.col("feat").cast("array<double>"), i)).alias(f"_a{i}")
-        for i in range(1, DIM + 1)
-    ]
-    per_win = joined.groupBy(F.year("ts").alias("yr"), "dst_v").agg(*aggs)
-    agg_arr = per_win.select(
-        "yr", "dst_v", F.array(*[f"_a{i}" for i in range(1, DIM + 1)]).alias("agg")
-    )
-    out = agg_arr.join(maybe_broadcast(features), agg_arr.dst_v == features.vec_id).select(
-        F.col("yr").cast("long").alias("yr"),
-        "vec_id",
-        forward("feat", "agg").alias("h"),
-    )
-    return out.select(
+    agg = neighbor_mean(edges, features, DIM, F.year("ts").alias("yr"))
+    h = sage_forward(features, agg, w_self, w_agg, F.col("yr").cast("long").alias("yr"))
+    return h.select(
         "yr",
         "vec_id",
         *[F.round(F.element_at("h", i), 4).alias(f"h{i}") for i in range(1, OUT_DIM + 1)],

@@ -93,10 +93,7 @@ def run_batch_soak(sf_dir: str | None) -> int:
             # uncollected py4j proxy cycles ARE the thing under test
             # (a real multi-query session never gc's between queries).
             # With the kernel-exit release in place the kernel itself
-            # collected before returning, so the ledger stays clean;
-            # with SPARK_GRAFT_DISABLE_KERNEL_GC=1 the superseded
-            # checkpoint block sets pile up across keys and the JVM gc
-            # cannot free them (py4j still pins them).
+            # collected before returning, so the ledger stays clean.
             spark.sparkContext._jvm.java.lang.System.gc()
             used, cap = _jvm_heap_mb(spark)
             print(
